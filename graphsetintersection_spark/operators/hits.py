@@ -8,22 +8,27 @@ analytics engine is expected to carry it next to PageRank — same corpus,
 same iterative-DataFrame machinery, and the web-spam / topical-ranking
 use cases the north rule's Common-Crawl corpus exists for.
 
-Execution strategy mirrors operators/pagerank.py exactly:
+Execution runs on operators/pagerank.py's engine:
 
-- the edge table is cached TWICE, hash-partitioned by ``dst`` and by
-  ``src`` — HITS aggregates alternately on both keys, and a stationary
-  correctly-partitioned cache per key is what keeps the rounds
-  exchange-free (the iterative-graph discipline of
-  operators/iterative.py);
-- below the ~10M-vertex cutover the score vectors are BROADCAST each
-  half-step and the matching edge cache makes the aggregation
-  exchange-free: zero per-iteration shuffle;
-- above it, the scores shuffle into a sort-merge join against the
-  pre-sorted opposite cache and the aggregation is the one exchange per
+- below the ~10M-vertex cutover, the BROADCAST-STATE ENGINE: prepare is
+  ONE exchange — one state cache holding the edges, their reversals and
+  one synthetic self row per vertex (row kinds flagged by ``_k``),
+  partitioned by the aggregation key — so both half-steps aggregate
+  exchange-free on the same cache (the auth half-step skips the reversed
+  rows, the hub half-step the forward ones). Each half-step is exactly
+  TWO Spark jobs (the score broadcast build, one eager localCheckpoint of
+  the raw total vector) and an ``Observation`` on the checkpoint returns
+  that half-step's L2 norm, which the next broadcast build divides out:
+  every half-step still normalizes, with the same float association, and
+  no half-step runs a norm aggregate job. The hub half-step's self rows
+  also carry each vertex's normalized auth, so the final scores are a
+  projection — no finalize join;
+- above it, the scores shuffle into a sort-merge join against two
+  pre-sorted per-key caches and the aggregation is the one exchange per
   half-step, with the shared salted two-stage aggregation
   (plans/skew.two_stage_agg) engaged per aggregation key when that key's
   degree distribution is Zipf-skewed;
-- every iteration's vectors are materialized with lineage truncation
+- every half-step's vector is materialized with lineage truncation
   (localCheckpoint) and the superseded snapshots released, so the
   logical plan stays O(1) across iterations and long runs do not
   accumulate cached score vectors.
@@ -33,12 +38,19 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from graphsetintersection_spark.operators.edges import canonicalize, vertices
 from graphsetintersection_spark.operators.iterative import (
     BROADCAST_STATE_MAX_VERTICES,
+)
+from graphsetintersection_spark.operators.pagerank import (
+    EDGE,
+    REV,
+    SELF,
+    broadcast_step,
+    self_value,
+    state_cache,
 )
 
 
@@ -50,21 +62,6 @@ class HITSResult:
     deltas: list = field(default_factory=list)
 
 
-def _l2_view(raw_cp: DataFrame) -> DataFrame:
-    """L2-normalized VIEW over a materialized total score vector (one row
-    per vertex, null s = no incident edges): the norm is a 1-row broadcast
-    folded into a lazy projection over the leaf — no separate
-    materialization per half-step. Consumers (the next half-step's
-    broadcast build, the delta aggregate, the final scores join) re-run
-    only this cheap projection against the cached leaf. Zeros/nulls
-    contribute nothing to the norm, so the null-skipping aggregate equals
-    the full-vector L2 norm."""
-    nm = raw_cp.agg(F.sqrt(F.sum(F.col("s") * F.col("s"))).alias("_nm"))
-    return raw_cp.crossJoin(F.broadcast(nm)).select(
-        "v", (F.coalesce(F.col("s"), F.lit(0.0)) / F.col("_nm")).alias("s")
-    )
-
-
 def _l2_normalized(raw: DataFrame, verts: DataFrame) -> DataFrame:
     """Full-vertex score vector from a sparse aggregation result,
     MATERIALIZED (eager localCheckpoint): missing vertices get 0, then the
@@ -73,8 +70,7 @@ def _l2_normalized(raw: DataFrame, verts: DataFrame) -> DataFrame:
     small aggregate, broadcast as one row). ``raw`` is persisted
     transiently because the plan references it twice (the norm aggregate
     and the vector itself) and Spark does not dedupe common subtrees — an
-    uncached half-step aggregation would execute twice (the same reason
-    pagerank's per-round contribs are transiently cached); the cache is
+    uncached half-step aggregation would execute twice; the cache is
     released once the checkpoint holds the result."""
     raw = raw.persist()
     try:
@@ -101,81 +97,113 @@ def hits(
     dedup: bool = True,
     broadcast_scores: bool | None = None,
     salt_hubs: int | str | None = "auto",
-    pre_canonical: bool = False,
 ) -> HITSResult:
     """Run HITS for ``max_iter`` iterations (or until the hub vector's max
     absolute change drops below ``tol``). Returns per-vertex (hub, auth)
     scores, both L2-normalized.
 
-    ``broadcast_scores`` None picks by vertex count (the pagerank
-    cutover); ``salt_hubs`` engages the salted two-stage aggregation on
-    the shuffle path per aggregation key ("auto" probes each key's skew,
-    an int forces that salt count, None disables).
+    ``broadcast_scores`` None picks by vertex count (the shared cutover);
+    ``salt_hubs`` engages the salted two-stage aggregation on the shuffle
+    path per aggregation key ("auto" probes each key's skew, an int forces
+    that salt count, None disables).
 
-    ``pre_canonical``: the caller asserts ``edges`` is ALREADY canonical —
-    long-typed, distinct, null-free, self-loop-free (e.g. the gate graphs'
-    ``select distinct … where src <> dst`` SQL). The normalization
-    re-distinct (one full exchange of the edge table) is skipped while
-    every canonical-input round shape (the self-row total aggregation)
-    stays engaged — unlike ``dedup=False``, which must assume real self
-    loops may exist and drops to the legacy round shape."""
+    ``dedup=False`` keeps real self loops u→u as edges (u is then its own
+    hub and authority); parallel edges collapse either way, inside the one
+    prepare exchange."""
     if max_iter < 1:
         raise ValueError("hits: max_iter must be >= 1")
     spark = edges.sparkSession
-    # transient cache for the SETUP phase only: the canonicalized edge
-    # frame feeds the vertex count, up to two skew probes, and both
-    # stationary cache builds — uncached that is four full scans of the
-    # raw edge table (the 100 TB input) instead of one. Released once
-    # the two per-key caches hold their own copies.
-    e = (
-        canonicalize(edges)
-        if dedup and not pre_canonical
-        else edges.select("src", "dst")
-    )
-    # an input the caller already cached/checkpointed needs no second
-    # copy — its scans are cache reads and the extra persist is a pure
-    # materialization barrier (same check as pagerank_df_prepare)
-    e_cached_here = not edges.is_cached
-    if e_cached_here:
-        e = e.persist()
-    verts = vertices(e).persist()
-    n = verts.count()
-    if n == 0:
-        empty = spark.createDataFrame([], "v long, hub double, auth double")
-        verts.unpersist()
-        e.unpersist()
-        return HITSResult(empty, 0, True)
-    if broadcast_scores is None:
-        broadcast_scores = n <= BROADCAST_STATE_MAX_VERTICES
-    # the self-row total-aggregation round shape relies on src != dst
-    # identifying the synthetic rows, which canonicalize guarantees by
-    # dropping real self loops (and pre_canonical asserts); with plain
-    # dedup=False a real self loop must keep contributing, so that case
-    # stays on the legacy round shape
-    total_agg = broadcast_scores and (dedup or pre_canonical)
+    # the shuffle path needs no reversed rows; auto mode builds them, as
+    # the vertex count that decides the path comes from this very cache
+    cache = state_cache(edges, dedup=dedup, reverse=broadcast_scores is not False)
+    try:
+        obs = Observation()
+        verts = (
+            cache.where(F.col("_k") == SELF)
+            .select(F.col("dst").alias("v"))
+            .observe(obs, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint(eager=True)
+        )
+        n = int(obs.get["n"])
+        if n == 0:
+            empty = spark.createDataFrame([], "v long, hub double, auth double")
+            return HITSResult(empty, 0, True)
+        if broadcast_scores is None:
+            broadcast_scores = n <= BROADCAST_STATE_MAX_VERTICES
+        if broadcast_scores:
+            return _hits_broadcast(cache, verts, max_iter, tol)
+        return _hits_shuffle(cache, verts, max_iter, tol, salt_hubs)
+    finally:
+        cache.unpersist(blocking=True)
 
+
+def _hub_delta(hub_new: DataFrame, hub: DataFrame) -> float:
+    return float(
+        hub_new.withColumnRenamed("s", "ns")
+        .join(hub, "v")
+        .agg(F.max(F.abs(F.col("ns") - F.col("s"))))
+        .collect()[0][0]
+    )
+
+
+def _hits_broadcast(cache, verts, max_iter, tol) -> HITSResult:
+    """The broadcast-state rounds: 4 jobs per iteration (module doc)."""
+    total = F.sum(F.when(F.col("_k") != SELF, F.col("s"))).alias("s")
+    norm = [F.sqrt(F.sum(F.col("s") * F.col("s"))).alias("nm")]
+
+    def scaled(nm, name="s"):
+        # the half-step's normalization, applied on the broadcast side:
+        # vertices without incident rows hold a null total, i.e. score 0
+        return (F.coalesce(F.col("s"), F.lit(0.0)) / F.lit(nm)).alias(name)
+
+    hub = verts.select("v", F.lit(1.0).alias("s"))
+    live: list[DataFrame] = []
+    converged = False
+    deltas: list[float] = []
+    it = 0
+    for it in range(max_iter):
+        a_raw, m = broadcast_step(cache, hub, [total], ["v", "s"], norm, skip=REV)
+        auth = a_raw.select("v", scaled(m["nm"]))
+        h_raw, m = broadcast_step(
+            cache, auth, [total, self_value("s", "auth")],
+            ["v", "s", "auth"], norm, skip=EDGE,
+        )
+        hub_new = h_raw.select("v", scaled(m["nm"]))
+        delta = None
+        if tol is not None:
+            delta = _hub_delta(hub_new, hub)
+            deltas.append(delta)
+        for leaf in live:
+            leaf.unpersist()
+        live = [a_raw, h_raw]
+        hub = hub_new
+        if tol is not None and delta < tol:
+            converged = True
+            it += 1
+            break
+    else:
+        it = max_iter
+    # the last hub half-step's self rows carried each vertex's normalized
+    # auth: the scores are one projection over its leaf
+    scores = h_raw.select("v", scaled(m["nm"], "hub"), "auth")
+    return HITSResult(scores, it, converged, deltas)
+
+
+def _hits_shuffle(cache, verts, max_iter, tol, salt_hubs) -> HITSResult:
+    """The at-scale rounds: two stationary per-key caches, a sort-merge
+    join and one (optionally salted) exchange per half-step."""
     from graphsetintersection_spark.plans.skew import (
         decide_hub_salting,
         mark_hubs,
         two_stage_agg,
     )
 
-    # e_dst/e_src alias the setup cache until reassigned below, so the
-    # finally at the bottom releases whatever exists at ANY failure point
-    # (repeat unpersists are idempotent no-ops)
-    e_dst = e
-    e_src = e
+    e = cache.where(F.col("_k") == EDGE).select("src", "dst")
 
     def half_step(edge_cache, scores, join_key, agg_key, plan):
         """One aggregation half-step: Σ over incident edges of the other
-        side's score, grouped on ``agg_key``. On the broadcast path the
-        cache carries synthetic (v, v) self rows (real self loops were
-        dropped by canonicalize), so the aggregation emits one row per
-        vertex — the self row's score is excluded by the src ≠ dst guard
-        and null-skipping sum."""
+        side's score, grouped on ``agg_key``."""
         sc = scores.withColumnRenamed("v", join_key)
-        if broadcast_scores:
-            sc = F.broadcast(sc)
         joined = edge_cache.join(sc, join_key)
         if plan is not None:
             return two_stage_agg(
@@ -187,30 +215,20 @@ def hits(
                 salts=plan.salts,
                 out_col="s",
             )
-        term = (
-            F.when(F.col("src") != F.col("dst"), F.col("s"))
-            if total_agg
-            else F.col("s")
-        )
         return joined.groupBy(F.col(agg_key).alias("v")).agg(
-            F.sum(term).alias("s")
+            F.sum(F.col("s")).alias("s")
         )
 
-    converged = False
-    deltas: list[float] = []
-    it = 0
-    # try/finally: an exception anywhere in the rounds must not leave the
-    # two edge caches (multi-GB at corpus scale) or the vertex cache
-    # registered for the session lifetime; blocking drops, because a
-    # back-to-back rerun (bench repeats, retries) would otherwise build
-    # its caches while these blocks are still being released
-    # (PreparedDFGraph.unpersist documents the same hazard).
+    # e_dst/e_src alias the setup cache until reassigned below, so the
+    # finally at the bottom releases whatever exists at ANY failure point
+    # (repeat unpersists are idempotent no-ops); blocking drops, because
+    # a back-to-back rerun would otherwise build its caches while these
+    # blocks are still being released
+    e_dst = e_src = e
     try:
-        # per-aggregation-key salting plans (shuffle path only —
-        # broadcast rounds aggregate on the cache's own partitioning, no
-        # skewed exchange exists to protect)
+        # per-aggregation-key salting plans
         plan_dst = plan_src = None
-        if not broadcast_scores and salt_hubs:
+        if salt_hubs:
             if salt_hubs == "auto":
                 plan_dst = decide_hub_salting(e, "dst")
                 plan_src = decide_hub_salting(e, "src")
@@ -219,34 +237,14 @@ def hits(
                 plan_dst = decide_hub_salting(e, "dst", salts=s, force=True)
                 plan_src = decide_hub_salting(e, "src", salts=s, force=True)
 
-        # two stationary caches — one per aggregation key. Broadcast
-        # rounds aggregate ON the partitioning key (exchange-free);
-        # shuffle rounds sort-merge-join on the OPPOSITE key, so that
-        # path also pre-sorts.
+        # two stationary caches — one per aggregation key, each
+        # sort-merge-joined on the OPPOSITE key, so pre-sorted
         if plan_dst is not None:
             e_dst = mark_hubs(e_dst, "dst", plan_dst)
         if plan_src is not None:
             e_src = mark_hubs(e_src, "src", plan_src)
-        if broadcast_scores:
-            if total_agg:
-                # synthetic self rows → total (one-row-per-vertex)
-                # half-step aggregations: no verts ⟕ raw finalize join and
-                # no separate normalized-vector materialization per
-                # half-step (guide §2.4)
-                self_rows = verts.select(
-                    F.col("v").alias("src"), F.col("v").alias("dst")
-                )
-                e_dst = e_dst.unionByName(self_rows)
-                e_src = e_src.unionByName(self_rows)
-            e_dst = e_dst.repartition("dst").persist()
-            e_src = e_src.repartition("src").persist()
-        else:
-            e_dst = (
-                e_dst.repartition("src").sortWithinPartitions("src").persist()
-            )
-            e_src = (
-                e_src.repartition("dst").sortWithinPartitions("dst").persist()
-            )
+        e_dst = e_dst.repartition("src").sortWithinPartitions("src").persist()
+        e_src = e_src.repartition("dst").sortWithinPartitions("dst").persist()
         # materialize the two stationary caches CONCURRENTLY: the builds
         # are independent jobs over the same setup cache, and submitting
         # them from one thread would serialize two shuffle latencies
@@ -257,7 +255,7 @@ def hits(
         with ThreadPoolExecutor(max_workers=2) as pool:
             for f in [pool.submit(e_dst.count), pool.submit(e_src.count)]:
                 f.result()
-        e.unpersist()  # the per-key caches are self-contained from here
+        cache.unpersist()  # the per-key caches are self-contained from here
 
         hub = verts.select("v", F.lit(1.0).alias("s")).localCheckpoint(
             eager=True
@@ -281,74 +279,40 @@ def hits(
         # warm 5.7 → 6.1 s, jobs 104 → 112): the broadcast build over an
         # unmaterialized cache with a nested norm-aggregate broadcast
         # spawns MORE AQE stage jobs than the checkpoint it replaces.
+        converged = False
+        deltas: list[float] = []
+        it = 0
         for it in range(max_iter):
-            if total_agg:
-                # OPTIMIZED BROADCAST ROUND: each half-step materializes
-                # only the RAW total vector (one localCheckpoint); the
-                # L2-normalized form is a lazy projection over that leaf
-                # with the norm folded in as a 1-row broadcast (_l2_view).
-                # Per iteration: 2 checkpoint jobs instead of 2 transient
-                # persists + 2 checkpointed normalize passes + 2 verts
-                # finalize joins.
-                a_raw = half_step(
-                    e_dst, hub, "src", "dst", plan_dst
-                ).localCheckpoint(eager=True)
-                auth_new = _l2_view(a_raw)
-                h_raw = half_step(
-                    e_src, auth_new, "dst", "src", plan_src
-                ).localCheckpoint(eager=True)
-                hub_new = _l2_view(h_raw)
-                new_leaves = [a_raw, h_raw]
-            else:
-                auth_new = _l2_normalized(
-                    half_step(e_dst, hub, "src", "dst", plan_dst), verts
-                )
-                hub_new = _l2_normalized(
-                    half_step(e_src, auth_new, "dst", "src", plan_src), verts
-                )
-                new_leaves = [auth_new, hub_new]
-
+            auth_new = _l2_normalized(
+                half_step(e_dst, hub, "src", "dst", plan_dst), verts
+            )
+            hub_new = _l2_normalized(
+                half_step(e_src, auth_new, "dst", "src", plan_src), verts
+            )
             delta = None
             if tol is not None:
-                delta = (
-                    hub_new.withColumnRenamed("s", "ns")
-                    .join(hub, "v")
-                    .agg(F.max(F.abs(F.col("ns") - F.col("s"))))
-                    .collect()[0][0]
-                )
-                deltas.append(float(delta))
-
+                delta = _hub_delta(hub_new, hub)
+                deltas.append(delta)
             for leaf in live_leaves:
                 leaf.unpersist()
-            live_leaves = new_leaves
+            live_leaves = [auth_new, hub_new]
             hub, auth = hub_new, auth_new
-            if tol is not None and delta is not None and delta < tol:
+            if tol is not None and delta < tol:
                 converged = True
                 it += 1
                 break
         else:
             it = max_iter
 
-        if total_agg:
-            # both views are total (one row per vertex, same vertex set)
-            scores = (
-                hub.withColumnRenamed("s", "hub")
-                .join(auth.withColumnRenamed("s", "auth"), "v")
-                .select("v", "hub", "auth")
-                .localCheckpoint(eager=True)
-            )
-        else:
-            scores = (
-                verts.join(hub.withColumnRenamed("s", "hub"), "v")
-                .join(auth.withColumnRenamed("s", "auth"), "v")
-                .select("v", "hub", "auth")
-                .localCheckpoint(eager=True)
-            )
+        scores = (
+            verts.join(hub.withColumnRenamed("s", "hub"), "v")
+            .join(auth.withColumnRenamed("s", "auth"), "v")
+            .select("v", "hub", "auth")
+            .localCheckpoint(eager=True)
+        )
         for leaf in live_leaves:
             leaf.unpersist()
         return HITSResult(scores, it, converged, deltas)
     finally:
-        verts.unpersist(blocking=True)
-        e.unpersist()
         e_dst.unpersist(blocking=True)
         e_src.unpersist(blocking=True)

@@ -147,3 +147,7 @@ def content_signature(df: DataFrame, *cols: str) -> tuple[int, int]:
     # aggregate over the already-cached leaf it replaces was nearly free.
     # The BFS level loop DOES use an observed row count (relabel.py),
     # where it replaces a whole extra checkpoint, not just an aggregate.
+    # The PageRank/PPR/HITS broadcast-state rounds (operators/pagerank.py)
+    # observe their dangling mass / L2 norm too: there it replaces TWO
+    # jobs per round (the 1-row aggregate and its broadcast build, which
+    # a round could not skip — it had no cached leaf to read it from).

@@ -9,10 +9,11 @@ from tests.conftest import random_graph
 from graphsetintersection_spark.operators.hits import hits
 
 
-def numpy_hits(pairs, iters=10):
+def numpy_hits(pairs, iters=10, self_loops=False):
     """Dense oracle with identical semantics: synchronous half-steps,
-    L2 normalization over the full vertex set each half-step."""
-    edges = {(u, v) for u, v in pairs if u != v}
+    L2 normalization over the full vertex set each half-step.
+    ``self_loops=True`` keeps real u→u edges (the ``dedup=False`` input)."""
+    edges = {(u, v) for u, v in pairs if self_loops or u != v}
     verts = sorted({x for e in edges for x in e})
     idx = {v: i for i, v in enumerate(verts)}
     n = len(verts)
@@ -109,3 +110,18 @@ def test_hits_releases_caches(spark, tiny_graph):
     res.scores.count()
     leaked = cache_rdd_ids() - before
     assert not leaked, f"leaked non-checkpoint caches: {leaked}"
+
+
+def test_hits_dedup_false_keeps_real_self_loop(spark):
+    """With ``dedup=False`` a real self loop u→u is an edge on every path:
+    u feeds its own authority and hub. The broadcast engine's synthetic
+    per-vertex rows share the (u, u) endpoints, so only the explicit
+    row-kind flag tells them apart."""
+    pairs = [(0, 0), (0, 1), (1, 2), (2, 0), (2, 2), (3, 0), (1, 4)]
+    df = spark.createDataFrame(pairs, "src long, dst long")
+    hub_exp, auth_exp = numpy_hits(pairs, iters=6, self_loops=True)
+    for kw in ({}, {"broadcast_scores": False, "salt_hubs": None}):
+        res = hits(df, max_iter=6, tol=None, dedup=False, **kw)
+        _assert_scores_allclose(res, hub_exp, auth_exp)
+    hub_exp, auth_exp = numpy_hits(pairs, iters=6)
+    _assert_scores_allclose(hits(df, max_iter=6, tol=None), hub_exp, auth_exp)

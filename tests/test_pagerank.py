@@ -10,9 +10,10 @@ from graphsetintersection_spark.operators.pagerank import pagerank
 from graphsetintersection_spark.plans.checkpoint import CheckpointManager
 
 
-def numpy_pagerank(pairs, alpha=0.85, iters=40):
-    """Dense oracle with identical semantics: damping + dangling mass."""
-    edges = {(u, v) for u, v in pairs if u != v}
+def numpy_pagerank(pairs, alpha=0.85, iters=40, self_loops=False):
+    """Dense oracle with identical semantics: damping + dangling mass.
+    ``self_loops=True`` keeps real u→u edges (the ``dedup=False`` input)."""
+    edges = {(u, v) for u, v in pairs if self_loops or u != v}
     verts = sorted({x for e in edges for x in e})
     idx = {v: i for i, v in enumerate(verts)}
     n = len(verts)
@@ -84,6 +85,164 @@ def test_pagerank_resume_matches_uninterrupted(spark, tiny_graph, tmp_path):
     assert [e["iteration"] for e in entries] == list(range(12))
     assert all(e["partitions"] for e in entries)
     assert all("n_vertices" in e["metrics"] for e in entries)
+
+    # personalized PageRank on the broadcast path: the restart vector p
+    # rides on the committed rank vector and must survive the resume
+    from graphsetintersection_spark.operators.pagerank import (
+        personalized_pagerank,
+    )
+
+    seeds = spark.createDataFrame([(v,) for v in sorted(full_ranks)[:3]], "v long")
+    full = personalized_pagerank(df, seeds, max_iter=12, tol=None)
+    full_ranks = {r["v"]: r["rank"] for r in full.ranks.collect()}
+    ck = CheckpointManager(str(tmp_path), "ppr-run", "pagerank")
+    personalized_pagerank(df, seeds, max_iter=5, tol=None, checkpointer=ck)
+    resumed = personalized_pagerank(df, seeds, max_iter=12, tol=None, checkpointer=ck)
+    res_ranks = {r["v"]: r["rank"] for r in resumed.ranks.collect()}
+    assert set(res_ranks) == set(full_ranks)
+    for v in full_ranks:
+        assert res_ranks[v] == pytest.approx(full_ranks[v], abs=1e-12)
+    assert [e["iteration"] for e in ck.committed()] == list(range(12))
+
+
+@pytest.mark.parametrize("personalized", [False, True], ids=["pagerank", "ppr"])
+def test_resume_from_rank_only_snapshot(spark, tiny_graph, tmp_path, personalized):
+    """A snapshot holding only (v, rank) — e.g. written by the shuffle
+    path or by an older run — resumes on the broadcast path: restore
+    attaches out-degree (and p) once, and the result equals an
+    uninterrupted run."""
+    from graphsetintersection_spark.operators.pagerank import (
+        personalized_pagerank,
+    )
+
+    pairs, df = tiny_graph
+    seeds = spark.createDataFrame(
+        [(v,) for v in sorted({x for e in pairs for x in e})[:3]], "v long"
+    )
+
+    def run(max_iter, ck=None):
+        if personalized:
+            return personalized_pagerank(df, seeds, max_iter=max_iter,
+                                         tol=None, checkpointer=ck)
+        return pagerank(df, max_iter=max_iter, tol=None, checkpointer=ck)
+
+    full = {r["v"]: r["rank"] for r in run(12).ranks.collect()}
+    ck = CheckpointManager(str(tmp_path), "rank-only", "pagerank")
+    ck.commit(run(5).ranks.select("v", "rank"), 4)
+    resumed = {r["v"]: r["rank"] for r in run(12, ck).ranks.collect()}
+    assert set(resumed) == set(full)
+    for v in full:
+        assert resumed[v] == pytest.approx(full[v], abs=1e-12)
+
+
+def test_pagerank_dedup_false_keeps_real_self_loop(spark):
+    """With ``dedup=False`` a real self loop u→u is an edge: it counts in
+    u's out-degree and sends rank(u)/outdeg(u) back to u. The synthetic
+    per-vertex rows of the broadcast engine share its (u, u) endpoints,
+    so only the explicit row-kind flag tells them apart."""
+    pairs = [(0, 0), (0, 1), (1, 2), (2, 0), (2, 2), (3, 0), (1, 4)]
+    df = spark.createDataFrame(pairs, "src long, dst long")
+    for kw in ({}, {"broadcast_ranks": False}):
+        res = pagerank(df, max_iter=30, tol=None, dedup=False, **kw)
+        _assert_allclose(res.ranks, numpy_pagerank(pairs, iters=30, self_loops=True))
+    # and the default drops them, as the oracle without self loops does
+    res = pagerank(df, max_iter=30, tol=None)
+    _assert_allclose(res.ranks, numpy_pagerank(pairs, iters=30))
+
+
+def _cache_rdd_ids(spark):
+    """Non-checkpoint persistent RDDs (the engine-wide leak convention of
+    tests/test_dedup.py: localCheckpoint snapshots are reference-tracked
+    by the ContextCleaner and do not count)."""
+    m = spark.sparkContext._jsc.getPersistentRDDs()
+    return {
+        k for k in m.keySet().toArray()
+        if not m.get(k).rdd().isLocallyCheckpointed()
+    }
+
+
+@pytest.mark.parametrize("op", ["pagerank", "personalized_pagerank", "pagerank_kernel"])
+def test_pagerank_operators_release_caches(spark, tiny_graph, monkeypatch, op):
+    """No cache of the prepare phase outlives the call, whether it
+    returns or raises after prepare."""
+    import graphsetintersection_spark.operators.pagerank as pr
+
+    pairs, df = tiny_graph
+    seeds = spark.createDataFrame(
+        [(v,) for v in sorted({x for e in pairs for x in e})[:3]], "v long"
+    )
+    absent = spark.createDataFrame([(10**9,)], "v long")
+    call = {
+        "pagerank": lambda: pr.pagerank(df, max_iter=3, tol=None),
+        "personalized_pagerank": lambda: pr.personalized_pagerank(
+            df, seeds, max_iter=3, tol=None),
+        "pagerank_kernel": lambda: pr.pagerank_kernel(df, max_iter=3),
+    }[op]
+
+    before = _cache_rdd_ids(spark)
+    call().ranks.count()
+    leaked = _cache_rdd_ids(spark) - before
+    assert not leaked, f"leaked non-checkpoint caches: {leaked}"
+
+    # raise after prepare: PPR with no seed in the graph raises by
+    # itself; the other two fail inside their iterate phase
+    if op == "personalized_pagerank":
+        call = lambda: pr.personalized_pagerank(df, absent, max_iter=3)  # noqa: E731
+    else:
+        name = "pagerank_df_iterate" if op == "pagerank" else "pagerank_kernel_iterate"
+        real = getattr(pr, name)
+
+        def failing(*a, **kw):
+            real(*a, **kw)
+            raise RuntimeError("injected")
+
+        monkeypatch.setattr(pr, name, failing)
+    with pytest.raises((ValueError, RuntimeError)):
+        call()
+    leaked = _cache_rdd_ids(spark) - before
+    assert not leaked, f"leaked non-checkpoint caches after a raise: {leaked}"
+
+
+def _jobs_per_round(spark, run, k=2):
+    """Spark jobs of ``run(k + 1)`` minus those of ``run(k)``, counted by
+    job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    counts = []
+    for rounds in (k, k + 1):
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            run(rounds)
+        finally:
+            sc._jsc.clearJobGroup()
+        counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    return counts[1] - counts[0]
+
+
+def test_broadcast_rounds_job_counts(spark, tiny_graph):
+    """The broadcast-state round is two jobs (rank broadcast build +
+    checkpointed aggregation, the next round's scalar observed on it);
+    HITS is two such half-steps. A per-round aggregate re-added later
+    fails here, not only in the benchmark."""
+    from graphsetintersection_spark.operators.hits import hits
+    from graphsetintersection_spark.operators.pagerank import (
+        personalized_pagerank,
+    )
+
+    pairs, df = tiny_graph
+    df = df.localCheckpoint(eager=True)
+    seeds = spark.createDataFrame(
+        [(v,) for v in sorted({x for e in pairs for x in e})[:3]], "v long"
+    )
+    pr_run = lambda r: pagerank(df, max_iter=r, tol=None).ranks.count()  # noqa: E731
+    assert _jobs_per_round(spark, pr_run) <= 2
+    ppr_run = lambda r: personalized_pagerank(  # noqa: E731
+        df, seeds, max_iter=r, tol=None).ranks.count()
+    assert _jobs_per_round(spark, ppr_run) <= 2
+    hits_run = lambda r: hits(df, max_iter=r, tol=None).scores.count()  # noqa: E731
+    assert _jobs_per_round(spark, hits_run) <= 4
 
 
 def test_pagerank_kernel_parity(spark, tiny_graph):
