@@ -85,8 +85,7 @@ edges = spark.read.parquet(%(edges)r).persist()
 n_edges = edges.count()
 
 def build():
-    j, _ = _edge_with_lower_adj(edges)
-    j = j.persist()
+    j = _edge_with_lower_adj(edges).persist()
     j.count()
     return j
 
@@ -101,7 +100,7 @@ jw.unpersist(True)
 # the iteration loops are what scale — measured separately, like the
 # reference's build vs query split (src/tc.cpp:28-29 vs :41-46)
 t0 = time.perf_counter()
-prep_k = pagerank_kernel_prepare(edges, relabel=False)  # corpus pre-relabeled
+prep_k = pagerank_kernel_prepare(edges)
 prep_k_secs = round(time.perf_counter() - t0, 2)
 t0 = time.perf_counter()
 prep_df = pagerank_df_prepare(edges)

@@ -188,7 +188,7 @@ def main() -> None:
 
     prep = timed(
         "pagerank_kernel_prepare",
-        lambda: pagerank_kernel_prepare(relabeled, relabel=False),
+        lambda: pagerank_kernel_prepare(relabeled),
         repeatable=False,  # persists its result — must build exactly once
     )
     timed(

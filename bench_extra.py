@@ -244,7 +244,7 @@ def section_coldkeys(spark, prof):
     rel = apply_order(edges, degree_order(edges, deg=degrees(edges))).persist()
     rel.count()
     prep = prof.run(
-        "prk_prepare_cold", lambda: pagerank_kernel_prepare(rel, relabel=False)
+        "prk_prepare_cold", lambda: pagerank_kernel_prepare(rel)
     )
     prof.run(
         "prk_iter3_cold", lambda: pagerank_kernel_iterate(prep, max_iter=3)

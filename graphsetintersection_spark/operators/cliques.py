@@ -236,7 +236,7 @@ def _bk_arrays(
 ) -> None:
     """Fallback for oversized groups: same BK+pivot over SORTED INDEX
     ARRAYS using the engine set kernels (kernels.intersect /
-    intersect_count — the reference's uint path,
+    difference — the reference's uint path,
     src/org_maximal_clique.cpp:169-314)."""
     from graphsetintersection_spark import kernels
 

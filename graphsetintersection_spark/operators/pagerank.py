@@ -603,10 +603,9 @@ def _dangling_sum(col: str):
 # and the prepare/iterate pair is what the benchmarks time.
 
 
-def pagerank_kernel_prepare(edges: DataFrame, relabel: bool = True) -> PreparedDFGraph:
-    """The engine's prepare (``pagerank_df_prepare``). ``relabel`` is
-    accepted for signature compatibility and ignored: the engine needs no
-    dense 0..V-1 ids."""
+def pagerank_kernel_prepare(edges: DataFrame) -> PreparedDFGraph:
+    """The engine's prepare (``pagerank_df_prepare``); it needs no dense
+    0..V-1 ids, so no relabel runs."""
     return pagerank_df_prepare(edges)
 
 
@@ -626,13 +625,12 @@ def pagerank_kernel(
     alpha: float = 0.85,
     max_iter: int = 20,
     tol: float | None = None,
-    relabel: bool = True,
 ) -> PageRankResult:
     """Broadcast-vector power iteration over stationary cached edge
     partitions: a thin call into the broadcast-state engine (see the
     retirement note above), with the former kernel's signature and
     (v, rank) result. Equals ``pagerank`` with ``tol=None``."""
-    prep = pagerank_kernel_prepare(edges, relabel=relabel)
+    prep = pagerank_kernel_prepare(edges)
     try:
         return pagerank_kernel_iterate(
             prep, alpha=alpha, max_iter=max_iter, tol=tol

@@ -279,14 +279,15 @@ def _bfs_levels(
 def _level_order(
     edges: DataFrame,
     root_exprs: list,
-    level_tiebreak: list,
+    order_cols: list,
     max_levels: int,
     rank_col: str = "new_id",
 ) -> DataFrame | None:
-    """Shared body of bfs_order / rcm_order: BFS levels from the extreme-
-    degree root, then the two-phase rank over (level, <tiebreak>).
-    Returns the materialized (v, deg, level, rank) frame or None if the
-    graph is empty. All BFS working caches are released before return."""
+    """Shared body of the BFS-level orderings (bfs / rcm / hybrid_bfsdeg):
+    BFS levels from the first vertex under ``root_exprs``, then the
+    two-phase rank over ``order_cols`` (any of level, deg, v). Returns the
+    materialized (v, deg, level, rank) frame or None if the graph is
+    empty. All BFS working caches are released before return."""
     deg = degrees(edges).persist()
     root_row = deg.orderBy(*root_exprs).first()
     if root_row is None:
@@ -299,9 +300,7 @@ def _level_order(
         F.coalesce("level", F.lit(max_levels + 1)).alias("level"),
         "deg",
     )
-    out = global_order_stats(
-        ranked, [F.col("level").asc(), *level_tiebreak], rank_col=rank_col
-    )
+    out = global_order_stats(ranked, order_cols, rank_col=rank_col)
     # global_order_stats returned an EAGERLY MATERIALIZED frame (its
     # contract) — the BFS working localCheckpoints are no longer referenced
     # by any recomputable lineage and can be dropped safely
@@ -328,7 +327,7 @@ def bfs_order(edges: DataFrame, max_levels: int = 64) -> DataFrame:
     out = _level_order(
         edges,
         [F.col("deg").desc(), F.col("v").asc()],
-        [F.col("deg").desc(), F.col("v").asc()],
+        [F.col("level").asc(), F.col("deg").desc(), F.col("v").asc()],
         max_levels,
     )
     if out is None:
@@ -353,7 +352,7 @@ def rcm_order(edges: DataFrame, max_levels: int = 64) -> DataFrame:
     out = _level_order(
         edges,
         [F.col("deg").asc(), F.col("v").asc()],
-        [F.col("deg").asc(), F.col("v").asc()],
+        [F.col("level").asc(), F.col("deg").asc(), F.col("v").asc()],
         max_levels,
         rank_col="_r",
     )
@@ -391,110 +390,15 @@ def hybrid_bfsdeg_order(edges: DataFrame, max_levels: int = 64) -> DataFrame:
     re-expression (level/id tiebreak), so it pins this implementation's
     semantics, not reference-exact parity."""
     spark = edges.sparkSession
-    deg = degrees(edges).persist()
-    root_row = deg.orderBy(F.col("v").asc()).first()
-    if root_row is None:
-        deg.unpersist()
-        return spark.createDataFrame([], "org_id long, new_id long")
-    root = int(root_row["v"])
-    levels, live = _bfs_levels(edges, root, max_levels, n=deg.count())
-    ranked = deg.join(levels, "v", "left").select(
-        "v",
-        F.coalesce("level", F.lit(max_levels + 1)).alias("level"),
-        "deg",
-    )
-    out = global_order_stats(
-        ranked,
+    out = _level_order(
+        edges,
+        [F.col("v").asc()],
         [F.col("deg").desc(), F.col("level").asc(), F.col("v").asc()],
-        rank_col="new_id",
+        max_levels,
     )
-    deg.unpersist()
-    for f in live:
-        f.unpersist()
-    return out.select(F.col("v").alias("org_id"), "new_id")
-
-
-def hybrid_bfsdeg_order_exact(
-    edges: DataFrame, max_driver_vertices: int = 2_000_000
-) -> DataFrame:
-    """Reference-EXACT hybrid_bfsdeg (src/porder.cpp:93-140), driver-side.
-
-    Unlike the distributed ``hybrid_bfsdeg_order`` re-expression (whose
-    level/id tie-break is a documented deviation), this variant mirrors
-    the reference literally: a multi-root queue BFS over the directed
-    out-adjacency — roots taken in ascending id order, each popped
-    vertex's unvisited out-neighbors discovered in ascending-id (sorted
-    CSR) order, discovery index assigned at PUSH time (porder.cpp:99-113)
-    — then the final permutation sorts by (out_deg + in_deg DESC,
-    bfs discovery index ASC) (porder.cpp:118-124). Queue discovery order
-    within a level follows parent order, not vertex id (e.g. edges
-    0→2, 0→3, 2→5, 3→4 discover 5 before 4), and every component gets
-    its own fresh BFS — the two behaviors the distributed tie-break
-    cannot reproduce.
-
-    A queue's discovery sequence is inherently sequential state, so —
-    like ``dfs_order`` / ``degeneracy_order`` — this runs driver-side
-    over numpy CSR under a vertex cap (checked BEFORE the collect); the
-    scalable family member is ``hybrid_bfsdeg_order``.
-    """
-    import numpy as np
-
-    spark = edges.sparkSession
-    e = canonicalize(edges)
-    _check_driver_cap(e, max_driver_vertices, "hybrid_bfsdeg exact")
-    rows = (
-        e.groupBy("src").agg(
-            F.sort_array(F.collect_list("dst")).alias("nbrs"),
-        ).collect()
-    )
-    in_rows = e.groupBy("dst").agg(F.count("*").alias("in_deg")).collect()
-    vs = {int(r["src"]) for r in rows}
-    for r in rows:
-        vs.update(int(u) for u in r["nbrs"])
-    if not vs:
+    if out is None:
         return spark.createDataFrame([], "org_id long, new_id long")
-    ids = np.array(sorted(vs), dtype=np.int64)
-    idx_of = {int(v): i for i, v in enumerate(ids)}
-    n = len(ids)
-    nbrs: list = [np.empty(0, dtype=np.int64)] * n
-    deg = np.zeros(n, dtype=np.int64)  # out_deg + in_deg, directed
-    for r in rows:
-        u = idx_of[int(r["src"])]
-        nbrs[u] = np.array(
-            [idx_of[int(w)] for w in r["nbrs"]], dtype=np.int64
-        )
-        deg[u] += len(nbrs[u])
-    for r in in_rows:
-        deg[idx_of[int(r["dst"])]] += int(r["in_deg"])
-    from collections import deque
-
-    bfs_idx = np.full(n, -1, dtype=np.int64)
-    cur = 0
-    q: deque = deque()
-    for root in range(n):
-        if bfs_idx[root] != -1:
-            continue
-        bfs_idx[root] = cur
-        cur += 1
-        q.append(root)
-        while q:
-            u = q.popleft()
-            for w in nbrs[u]:
-                if bfs_idx[w] == -1:
-                    bfs_idx[w] = cur
-                    cur += 1
-                    q.append(int(w))
-    # (deg desc, bfs_idx asc) — bfs_idx is unique, so the order is total
-    perm = np.lexsort((bfs_idx, -deg))
-    new_id = np.empty(n, dtype=np.int64)
-    new_id[perm] = np.arange(n, dtype=np.int64)
-    out = [(int(ids[i]), int(new_id[i])) for i in range(n)]
-    return spark.createDataFrame(out, "org_id long, new_id long")
-
-
-def leaf_node_count(edges: DataFrame) -> int:
-    """Count degree-1 vertices (src/porder.cpp:82-91)."""
-    return degrees(edges).where(F.col("deg") == 1).count()
+    return out.select(F.col("v").alias("org_id"), "new_id")
 
 
 def _check_driver_cap(und_or_e: DataFrame, cap: int, opname: str) -> None:

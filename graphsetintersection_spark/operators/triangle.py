@@ -81,17 +81,17 @@ def _join_adj(e: DataFrame, adj: DataFrame, key: str, out: str,
 AUTO_HUB_RATIO = 0.25
 # below this many total adjacency entries (= oriented edges) the skewed
 # shuffle a hub split would prevent doesn't exist — the whole joined frame
-# fits in a handful of partitions. Small inputs skip the split (and its
-# persist) entirely; this is a scale optimization, not a semantics switch.
+# fits in a handful of partitions. Small inputs skip the split entirely;
+# this is a scale optimization, not a semantics switch.
 AUTO_HUB_MIN_EDGES = 5_000_000
 
 
 def _hub_ratio_from_stats(entries: float, mx, av) -> float | None:
-    """The skew heuristic, shared by every "auto" route (the join-path
-    probe in ``_edge_with_lower_adj`` and the kernel planner's probe in
-    ``_kernel_count`` feed it their already-collected stats): split iff
-    the graph is big enough that a skewed shuffle matters AND the max
-    degree dominates the mean (Zipf-style skew)."""
+    """The skew heuristic behind ``hub_deg_ratio="auto"`` on the kernel
+    count's join path (``_kernel_count`` feeds it the stats its probe
+    already collected): split iff the graph is big enough that a skewed
+    shuffle matters AND the max degree dominates the mean (Zipf-style
+    skew)."""
     if entries < AUTO_HUB_MIN_EDGES:
         return None
     if (mx or 0) >= 1024 and (mx or 0) >= 16 * (av or 1.0):
@@ -99,62 +99,24 @@ def _hub_ratio_from_stats(entries: float, mx, av) -> float | None:
     return None
 
 
-def _auto_hub_ratio(adj: DataFrame) -> float | None:
-    """Decide whether the broadcast-hub split pays. One small aggregate;
-    the decision itself lives in ``_hub_ratio_from_stats``."""
-    row = adj.agg(
-        F.max(F.size("nbrs")).alias("mx"),
-        F.avg(F.size("nbrs")).alias("av"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    if not row["n"]:
-        return None
-    total_entries = float(row["n"]) * float(row["av"] or 0.0)
-    return _hub_ratio_from_stats(total_entries, row["mx"], row["av"])
-
-
-def _edge_with_lower_adj(
-    edges: DataFrame, hub_deg_ratio: float | None | str = None
-) -> tuple[DataFrame, DataFrame | None]:
+def _edge_with_lower_adj(edges: DataFrame) -> DataFrame:
     """Joined frame (src, dst, nbrs_a, nbrs_b) of smaller-id adjacency for
     both endpoints of each oriented edge. Two shuffles; the oriented edge
     list is reused for both the iteration list and the adjacency source,
     mirroring the reference build (src/bitpack_triangle_count.cpp:18-68).
-    ``hub_deg_ratio`` enables the broadcast-hub-adjacency split; "auto"
-    turns it on only when the degree distribution is skewed.
-
-    Returns (joined, persisted_adj_or_None); the caller MUST unpersist the
-    second element once the joined frame has been consumed (a leaked
-    multi-hundred-MB adjacency cache starves executor storage memory)."""
+    Nothing is persisted."""
     e = orient(edges).select("src", "dst")
     adj = lower_adjacency(e)
-    persisted: DataFrame | None = None
-    if hub_deg_ratio is not None:
-        # Persist BEFORE the auto probe: the probe's aggregate materializes
-        # the cache, so the adjacency groupBy executes exactly once per
-        # count whether or not the split engages — Spark does not dedupe
-        # common subtrees, so an unpersisted adj would otherwise be rebuilt
-        # independently by BOTH joins below (up to 3 builds per count; the
-        # r4 lgraph_triangle_count 7.6s→14.7s regression). The cache is one
-        # row per vertex — cheap insurance at any scale. The caller
-        # unpersists it (see contract above).
-        adj = adj.persist()
-        persisted = adj
-        if hub_deg_ratio == "auto":
-            hub_deg_ratio = _auto_hub_ratio(adj)
-    j1 = _join_adj(e, adj, "src", "nbrs_a", hub_deg_ratio)
-    j2 = _join_adj(j1, adj, "dst", "nbrs_b", hub_deg_ratio)
-    return j2.select("src", "dst", "nbrs_a", "nbrs_b"), persisted
+    j1 = _join_adj(e, adj, "src", "nbrs_a", None)
+    j2 = _join_adj(j1, adj, "dst", "nbrs_b", None)
+    return j2.select("src", "dst", "nbrs_a", "nbrs_b")
 
 
 def triangle_count_arrays(edges: DataFrame) -> int:
     """Adjacency + JVM ``array_intersect`` — no Python at all."""
-    joined, persisted = _edge_with_lower_adj(edges)
-    row = joined.agg(
+    row = _edge_with_lower_adj(edges).agg(
         F.sum(F.size(F.array_intersect("nbrs_a", "nbrs_b"))).alias("tri")
     ).collect()[0]
-    if persisted is not None:
-        persisted.unpersist()
     return int(row["tri"] or 0)
 
 
@@ -243,12 +205,9 @@ def _collect_csr(adj: DataFrame):
     comment never priced in. Callers guard size via
     BROADCAST_ADJ_MAX_ENTRIES."""
     import numpy as np
-
-    try:
-        tbl = adj.select("v", "nbrs").toArrow()
-    except AttributeError:  # pyspark < 4.0 — small-input fallback
-        return _collect_csr_rows(adj)
     import pyarrow.compute as pc
+
+    tbl = adj.select("v", "nbrs").toArrow()
 
     vs = (
         tbl.column("v")
@@ -287,27 +246,6 @@ def _collect_csr(adj: DataFrame):
     else:
         flat = np.empty(0, dtype=np.int64)
     return vs_s, indptr, flat
-
-
-def _collect_csr_rows(adj: DataFrame):
-    """Row-based CSR collection — the pre-Arrow fallback of
-    ``_collect_csr`` (kept only for pyspark < 4.0 sessions)."""
-    import numpy as np
-
-    rows = adj.select("v", "nbrs").collect()
-    rows.sort(key=lambda r: r["v"])
-    vs = np.fromiter((r["v"] for r in rows), dtype=np.int64, count=len(rows))
-    lens = np.fromiter(
-        (len(r["nbrs"]) for r in rows), dtype=np.int64, count=len(rows)
-    )
-    indptr = np.zeros(len(rows) + 1, dtype=np.int64)
-    np.cumsum(lens, out=indptr[1:])
-    flat = (
-        np.concatenate([np.asarray(r["nbrs"], dtype=np.int64) for r in rows])
-        if rows
-        else np.empty(0, dtype=np.int64)
-    )
-    return vs, indptr, flat
 
 
 def _csr_gather(vs, indptr, flat, keys):
@@ -455,7 +393,6 @@ def _kernel_count(
     strategy: str,
     acc_inter=None,
     acc_cmp=None,
-    persist_adjacency: bool = True,
 ) -> int:
     """Shared planner for the kernel triangle counts. ONE probe aggregate
     over the persisted adjacency decides both the strategy and (on the
@@ -471,18 +408,8 @@ def _kernel_count(
     - ``join`` (auto above the bound — the 100 TB shape): per-edge
       adjacency equi-joins with the broadcast-hub split for Zipf skew;
       neighbor lists ship once per incident edge, which is the price of
-      not fitting in memory.
-
-    ``persist_adjacency`` (join path): True (default) caches the
-    adjacency so it builds ONCE and both joins read the cache — the
-    lowest measured wall-clock at every size tried (59M edges, local[4]:
-    ~235s pooled-median vs the recompute plan's 290s; local[16]: parity).
-    False rebuilds the adjacency aggregate inside each join — more total
-    work, but all of it embarrassingly parallel shuffle/aggregate, which
-    is the shape that measured the 0.84 two-size scaling efficiency
-    (BENCH/BASELINE.md round 3 vs round 5 discussion): on a fixed-size
-    single box, deleting redundant parallel work lowers the 4→16 RATIO
-    even as it lowers every absolute time.
+      not fitting in memory. Both joins read the persisted adjacency, so
+      it builds once (measured: see ``triangle_count_kernel``).
     """
     from graphsetintersection_spark.kernels import (
         batch_bsr_intersect_count as _bsr,
@@ -568,14 +495,8 @@ def _kernel_count(
             hub_deg_ratio = _hub_ratio_from_stats(
                 entries, probe["mx"], probe["av"]
             )
-        adj_join = adj
-        if not persist_adjacency:
-            # the probe already ran off the cache; rebuild per join from
-            # the raw aggregate (see persist_adjacency in the docstring)
-            adj.unpersist()
-            adj_join = lower_adjacency(e)
-        j1 = _join_adj(e, adj_join, "src", "nbrs_a", hub_deg_ratio)
-        j2 = _join_adj(j1, adj_join, "dst", "nbrs_b", hub_deg_ratio)
+        j1 = _join_adj(e, adj, "src", "nbrs_a", hub_deg_ratio)
+        j2 = _join_adj(j1, adj, "dst", "nbrs_b", hub_deg_ratio)
         joined = j2.select("src", "dst", "nbrs_a", "nbrs_b")
         kernel_fn = {"bsr": _bsr, "auto": _bsr, "uint": _uint}[kernel]
         fn = _make_count_batches(kernel_fn, acc_inter, acc_cmp)
@@ -593,7 +514,6 @@ def triangle_count_kernel(
     hub_deg_ratio: float | None | str = "auto",
     kernel: str = "auto",
     strategy: str = "auto",
-    persist_adjacency: bool = True,
 ) -> int:
     """Adjacency + vectorized numpy batch kernel via mapInArrow.
 
@@ -601,9 +521,12 @@ def triangle_count_kernel(
     per-thread ``con_res[id]`` partials, src/bitpack_triangle_count
     .cpp:150-205); Spark's ``sum`` does the final reduce. The whole plan
     is SINGLE-PASS: the per-edge adjacency join streams straight into the
-    count kernel, nothing besides the (small) adjacency is ever persisted
-    — measured 0.84 scaling efficiency 4→16 pinned cores on a 59M-edge
-    corpus (BENCH/BASELINE.md).
+    count kernel, nothing besides the (small) adjacency is ever persisted.
+    On a 59M-edge corpus this plan ties or beats, at 4 and at 16 pinned
+    cores, a plan that rebuilt the adjacency inside each join; its 4→16
+    efficiency is 0.59 against that plan's 0.84, because the rebuild was
+    extra parallel work (BENCH/BASELINE.md, round 5 two-size
+    revalidation of the join strategy).
 
     ``strategy``: "broadcast" ships the whole adjacency as a CSR
     broadcast and streams the bare (src, dst) list through the kernel —
@@ -628,18 +551,14 @@ def triangle_count_kernel(
     the Org-path parity twin, kept for differential testing and for
     extremely sparse id spaces), "bitset" (dense bit matrix; broadcast
     strategy only)."""
-    return _kernel_count(
-        edges, hub_deg_ratio, kernel, strategy,
-        persist_adjacency=persist_adjacency,
-    )
+    return _kernel_count(edges, hub_deg_ratio, kernel, strategy)
 
 
 def triangles_per_edge(edges: DataFrame) -> DataFrame:
     """Per-oriented-edge common-smaller-neighbor count — the engine's
     surfaced form of intersect_count (set_operation.cpp:129-144) over
     adjacency pairs. Returns (src, dst, common) with common > 0 only."""
-    joined, _ = _edge_with_lower_adj(edges)  # no hub split → nothing persisted
-    return joined.select(
+    return _edge_with_lower_adj(edges).select(
         "src",
         "dst",
         F.size(F.array_intersect("nbrs_a", "nbrs_b")).alias("common"),

@@ -11,7 +11,6 @@ from graphsetintersection_spark.operators.relabel import (
     continuous_ids,
     degree_order,
     hub_degree_threshold,
-    leaf_node_count,
     select_bignode,
 )
 from graphsetintersection_spark.operators.triangle import triangle_count_kernel
@@ -70,11 +69,6 @@ def test_select_bignode_covers_ratio(spark, tiny_graph):
     # minimality: dropping the last (smallest-degree) hub falls below
     smallest = min(r["deg"] for r in hubs)
     assert cum - smallest < 0.3 * total
-
-
-def test_leaf_node_count(spark):
-    df = spark.createDataFrame([(0, 1), (1, 2), (2, 0), (2, 3)], "src long, dst long")
-    assert leaf_node_count(df) == 1  # vertex 3
 
 
 def test_hub_degree_threshold(spark):
@@ -453,86 +447,6 @@ def test_mloggapa_order_densifies_scrambled_communities(spark):
     first = halves[0] if lo else halves[1]
     assert max(first) < len(rows) // 2 + len(rows) % 2
     assert comp_ratio(apply_order(df, order)) < comp_ratio(df)
-
-
-def _hybrid_exact_oracle(edges):
-    """Independent plain-dict mirror of src/porder.cpp:93-140: multi-root
-    queue BFS over sorted out-adjacency (discovery index assigned at
-    push), then sort by (out+in degree desc, discovery index asc)."""
-    from collections import deque
-
-    verts = sorted({u for e in edges for u in e})
-    out_adj = {v: [] for v in verts}
-    deg = {v: 0 for v in verts}
-    for u, v in sorted(set(edges)):
-        out_adj[u].append(v)
-        deg[u] += 1
-        deg[v] += 1
-    bfs_idx = {}
-    cur = 0
-    for root in verts:
-        if root in bfs_idx:
-            continue
-        bfs_idx[root] = cur
-        cur += 1
-        q = deque([root])
-        while q:
-            u = q.popleft()
-            for w in out_adj[u]:
-                if w not in bfs_idx:
-                    bfs_idx[w] = cur
-                    cur += 1
-                    q.append(w)
-    ranked = sorted(verts, key=lambda v: (-deg[v], bfs_idx[v]))
-    return {v: i for i, v in enumerate(ranked)}
-
-
-def test_hybrid_bfsdeg_exact_queue_order(spark):
-    """hybrid_bfsdeg_order_exact mirrors the reference's queue discovery
-    semantics on the exact counterexample where the distributed
-    re-expression's (level, id) tie-break deviates (ADVICE r4 #1):
-    edges 0→2, 0→3, 2→5, 3→4 — the queue discovers 5 BEFORE 4 (5 is
-    found while popping 2, which entered the queue before 3 was popped),
-    while level/id ordering would put 4 first."""
-    from graphsetintersection_spark.operators.relabel import (
-        hybrid_bfsdeg_order_exact,
-    )
-
-    edges = [(0, 2), (0, 3), (2, 5), (3, 4)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r["org_id"]: r["new_id"]
-        for r in hybrid_bfsdeg_order_exact(df).collect()
-    }
-    # degrees: 0→2, 2→2, 3→2, 4→1, 5→1; bfs idx: 0,2,3 = 0,1,2; 5=3, 4=4
-    # sort (deg desc, idx asc): 0, 2, 3, 5, 4
-    assert got == {0: 0, 2: 1, 3: 2, 5: 3, 4: 4}
-    assert got == _hybrid_exact_oracle(edges)
-
-
-def test_hybrid_bfsdeg_exact_multiroot_random(spark):
-    """Random directed graphs incl. disconnected components: the
-    driver-exact implementation equals the independent mirror, each
-    component restarts its own BFS from the smallest unvisited id, and
-    the permutation is dense 0-based."""
-    from graphsetintersection_spark.operators.relabel import (
-        hybrid_bfsdeg_order_exact,
-    )
-
-    for seed in (3, 11):
-        edges = [
-            (u, v) for u, v in random_graph(60, 150, seed=seed) if u != v
-        ]
-        # add an out-edge-unreachable island so multi-root restart fires
-        edges += [(900, 901), (901, 902)]
-        df = spark.createDataFrame(edges, "src long, dst long")
-        got = {
-            r["org_id"]: r["new_id"]
-            for r in hybrid_bfsdeg_order_exact(df).collect()
-        }
-        expect = _hybrid_exact_oracle(edges)
-        assert got == expect
-        assert sorted(got.values()) == list(range(len(expect)))
 
 
 def test_graph_bisection_order_equals_driver_exact(spark):

@@ -49,7 +49,9 @@ def test_triangle_parity_medium(spark):
 
 def test_triangle_hub_split_parity(spark):
     """Broadcast-hub-adjacency split must not change the count (skew path
-    vs plain path — another cross-implementation parity check)."""
+    vs plain path — another cross-implementation parity check). The split
+    lives on the join strategy only; "auto" would pick the broadcast CSR
+    on a graph this small and never read ``hub_deg_ratio``."""
     import numpy as np
 
     rng = np.random.default_rng(3)
@@ -58,7 +60,9 @@ def test_triangle_hub_split_parity(spark):
     src = rng.integers(0, n, 3000)
     pairs = [(int(a), int(b)) for a, b in zip(src, dst) if a != b]
     df = spark.createDataFrame(pairs, "src long, dst long")
-    assert triangle_count_kernel(df, hub_deg_ratio=0.3) == brute_triangles(pairs)
+    assert triangle_count_kernel(
+        df, hub_deg_ratio=0.3, strategy="join"
+    ) == brute_triangles(pairs)
 
 
 def test_triangle_bsr_kernel_parity(spark):
@@ -76,30 +80,6 @@ def test_triangle_bsr_kernel_parity(spark):
     relabeled = apply_order(df, degree_order(df))
     assert triangle_count_kernel(relabeled, kernel="bsr") == expected
     assert triangle_count_kernel(df, kernel="bsr") == expected
-
-
-def test_auto_probe_caches_adjacency(spark, tiny_graph):
-    """On the "auto" path the adjacency groupBy must execute ONCE per
-    count: the probe materializes a persisted adj, and BOTH endpoint joins
-    read the cache (InMemoryTableScan) instead of rebuilding the aggregate
-    subtree (the r4 triple-computation; VERDICT r4 "What's wrong" #1)."""
-    from graphsetintersection_spark.operators.triangle import (
-        _edge_with_lower_adj,
-    )
-
-    _, df = tiny_graph
-    joined, persisted = _edge_with_lower_adj(df, hub_deg_ratio="auto")
-    try:
-        assert persisted is not None  # probe ran → adj cached
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("InMemoryTableScan") >= 2  # both joins hit cache
-        # the only adjacency builds are inside the cached relation: the
-        # executed plan outside it has no sort_array(collect_list(...))
-        outside = plan.split("InMemoryRelation")[0]
-        assert "collect_list" not in outside
-    finally:
-        if persisted is not None:
-            persisted.unpersist()
 
 
 def test_triangles_per_edge_sums_to_total(spark, tiny_graph):
@@ -254,25 +234,24 @@ def test_negative_ids_fail_loudly_never_silently(spark):
 
 def test_collect_csr_arrow_matches_rows(spark):
     """The Arrow CSR collection (one contiguous buffer, no per-row Python
-    objects) must return exactly what the Row-based fallback returns —
+    objects) must return exactly the CSR built from the collected rows —
     same sorted vertices, same indptr, same flattened neighbor order."""
     import numpy as np
 
     from graphsetintersection_spark.operators.adjacency import lower_adjacency
     from graphsetintersection_spark.operators.edges import orient
-    from graphsetintersection_spark.operators.triangle import (
-        _collect_csr,
-        _collect_csr_rows,
-    )
+    from graphsetintersection_spark.operators.triangle import _collect_csr
 
     pairs = random_graph(120, 900, seed=23)
     df = spark.createDataFrame(pairs, "src long, dst long")
     adj = lower_adjacency(orient(df).select("src", "dst"))
+    rows = sorted(adj.collect(), key=lambda r: r["v"])
     vs_a, ip_a, fl_a = _collect_csr(adj)
-    vs_r, ip_r, fl_r = _collect_csr_rows(adj)
-    np.testing.assert_array_equal(vs_a, vs_r)
-    np.testing.assert_array_equal(ip_a, ip_r)
-    np.testing.assert_array_equal(fl_a, fl_r)
+    np.testing.assert_array_equal(vs_a, [r["v"] for r in rows])
+    np.testing.assert_array_equal(
+        ip_a, np.cumsum([0] + [len(r["nbrs"]) for r in rows])
+    )
+    np.testing.assert_array_equal(fl_a, [u for r in rows for u in r["nbrs"]])
     # empty adjacency round-trips too
     empty = spark.createDataFrame([], "v long, nbrs array<long>")
     vs_e, ip_e, fl_e = _collect_csr(empty)
